@@ -301,11 +301,10 @@ class MdioDataset:
         deletes any existing store first (the reference flags it
         testing-only for the same reason).
 
-        ``compressor`` overrides the per-variable spec compressor; the spec's
-        ``blosc`` entries are honored only when the blosc wheel exists, else
-        the store falls back to zlib at the same level (documented deviation —
-        this container has no blosc; the chunk layout and metadata are
-        unchanged).
+        ``compressor`` overrides the per-variable spec compressor; otherwise
+        each variable's spec compressor maps through
+        ``_map_spec_compressor`` (blosc with any cname the reference
+        accepts, zlib, gzip; absent or unknown → zlib level 5).
         """
         if mode not in ("create", "create_clean"):
             raise ValueError(f"mode must be 'create' or 'create_clean', got {mode!r}")
@@ -832,17 +831,15 @@ def _contiguous_runs(hits: np.ndarray) -> list[tuple[int, int]]:
 
 
 def _map_spec_compressor(comp: dict | None) -> dict | None:
-    """Spec compressor → chunk codec. blosc honored only if the wheel exists;
-    else zlib at the same level (layout/metadata unchanged)."""
+    """Spec compressor → chunk codec. blosc keeps its cname, clevel and
+    shuffle; zlib/gzip keep their level; absent or unknown → zlib level 5."""
     if comp is None:
         return {"id": "zlib", "level": 5}
     name = comp.get("name")
     if name == "blosc":
         # every cname the reference accepts (dataset_factory.h:288-386)
-        # is honored natively: blosc1.py + lz4.py + blosclz.py + snappy.py
-        # + zstd.py implement the public formats wheel-free (zstd WRITE is
-        # store-mode — valid frames, no entropy coding — until a wheel
-        # exists; decode is full RFC 8878)
+        # is honored for read and write: blosc1.py frames the streams,
+        # pyarrow codes lz4/snappy/zstd and blosclz.py codes blosclz
         # "algorithm" is the legacy MDIO-cpp key for cname
         # (resolve_blosc_cname, dataset_factory.h:237-246)
         cname = comp.get("cname", comp.get("algorithm", "lz4"))

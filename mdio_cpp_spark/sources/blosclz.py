@@ -31,8 +31,8 @@ format is public (c-blosc ``blosclz.c``) and self-contained:
 Matches may overlap their output (dist < mlen → byte-serial RLE
 semantics), exactly like LZ4.
 
-Interop caveat (same posture as sources/lz4.py's split-stream note): with
-no blosc wheel installable in this container (tests/INTEROP_PROBE.md) this
+Interop caveat (same posture as blosc1.py's split-stream encoder): with
+no blosc wheel to compare against (tests/INTEROP_PROBE.md) this
 transcription of the public format is pinned by handcrafted token vectors
 and round-trip properties, not differentially verified against c-blosc
 bytes — re-probed each round. The boundary arithmetic is internally

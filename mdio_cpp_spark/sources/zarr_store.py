@@ -242,6 +242,12 @@ def _block_from_raw(meta: ZarrArrayMeta, raw: bytes, shape: tuple) -> np.ndarray
     return arr.reshape(shape, order=meta.order)
 
 
+def _raw_nbytes(meta: ZarrArrayMeta, shape: tuple) -> int:
+    """Serialized size of a ``shape`` block: what its codec chain must
+    regenerate on decode."""
+    return int(np.prod(shape)) * (meta.stored_dtype or meta.np_dtype).itemsize
+
+
 def _raw_from_block(meta: ZarrArrayMeta, block: np.ndarray) -> bytes:
     """Serialize one typed block to chunk bytes (transpose-aware inverse
     of _block_from_raw)."""
@@ -283,7 +289,8 @@ def _decode_shard(meta: ZarrArrayMeta, raw: bytes) -> np.ndarray:
             f"shard for {meta.name!r} shorter ({len(raw)} B) than its "
             f"index ({isize} B)")
     enc_idx = raw[-isize:] if meta.shard["index_location"] == "end" else raw[:isize]
-    idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"])
+    idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"],
+                                nbytes=n * 16)
     pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
     block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
     for k in range(n):
@@ -294,7 +301,8 @@ def _decode_shard(meta: ZarrArrayMeta, raw: bytes) -> np.ndarray:
             raise ValueError(
                 f"shard for {meta.name!r}: inner chunk {k} extent "
                 f"[{off}, {off + ln}) past shard end {len(raw)}")
-        sub_raw = _codecs.decompress_v3(raw[off : off + ln], meta.shard["codecs"])
+        sub_raw = _codecs.decompress_v3(raw[off : off + ln], meta.shard["codecs"],
+                                        nbytes=_raw_nbytes(meta, inner))
         coords_in = np.unravel_index(k, grid)
         sl = tuple(
             slice(int(c) * i, (int(c) + 1) * i) for c, i in zip(coords_in, inner)
@@ -1070,7 +1078,8 @@ class ZarrStore:
         elif meta.shard is not None:
             return _decode_shard(meta, raw)
         else:
-            raw = _codecs.decompress_v3(raw, meta.v3_codecs)
+            raw = _codecs.decompress_v3(raw, meta.v3_codecs,
+                                        nbytes=_raw_nbytes(meta, meta.chunks))
             return _block_from_raw(meta, raw, meta.chunks)
         arr = np.frombuffer(raw, dtype=meta.stored_dtype or meta.np_dtype)
         if meta.stored_dtype is not None:
@@ -1122,7 +1131,8 @@ class ZarrStore:
         if len(enc_idx) < isize:
             raise ValueError(
                 f"shard for {meta.name!r} shorter than its index ({isize} B)")
-        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"])
+        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"],
+                                    nbytes=n * 16)
         pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
         block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
         for coords_in in itertools.product(*rngs):
@@ -1135,7 +1145,8 @@ class ZarrStore:
                 raise ValueError(
                     f"shard for {meta.name!r}: range read of inner chunk "
                     f"{k} [{off}, {off + ln}) failed")
-            sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"])
+            sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"],
+                                            nbytes=_raw_nbytes(meta, inner))
             sl = tuple(
                 slice(int(c) * i, (int(c) + 1) * i)
                 for c, i in zip(coords_in, inner)
@@ -1168,7 +1179,8 @@ class ZarrStore:
         if len(enc_idx) < isize:
             raise ValueError(
                 f"shard for {meta.name!r} shorter than its index ({isize} B)")
-        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"])
+        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"],
+                                    nbytes=n * 16)
         pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
         inner = meta.shard["chunk_shape"]
 
@@ -1186,7 +1198,8 @@ class ZarrStore:
                     raise ValueError(
                         f"shard for {meta.name!r}: range read of inner "
                         f"chunk {k} [{off}, {off + ln}) failed")
-                sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"])
+                sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"],
+                                                nbytes=_raw_nbytes(meta, inner))
                 yield coords_in, _block_from_raw(meta, sub_raw, inner)
 
         return gen()

@@ -248,23 +248,75 @@ def _blosc_decode(frame: bytes) -> bytes:
 
 class _ZBackBits:
     """RFC 8878 backward bitstream: LSB-packed bytes consumed from the
-    end; the last byte's top set bit is the padding sentinel."""
+    end; the last byte's top set bit is the padding sentinel. Zero-filled
+    reads past the start set ``over``."""
 
     def __init__(self, data: bytes):
         assert data and data[-1] != 0, "spec reader: missing zstd sentinel"
         self.data = data
         self.pos = (len(data) - 1) * 8 + data[-1].bit_length() - 1
+        self.over = False
+
+    def peek(self, n: int) -> int:
+        """The next ``n`` bits without consuming them, zero-filled."""
+        have = min(n, self.pos)
+        if have == 0:
+            return 0
+        p = self.pos - have
+        chunk = int.from_bytes(self.data[p >> 3 : ((self.pos - 1) >> 3) + 1], "little")
+        return ((chunk >> (p & 7)) & ((1 << have) - 1)) << (n - have)
 
     def read(self, n: int, zero_fill: bool = False) -> int:
         if n == 0:
             return 0
-        have = min(n, self.pos) if zero_fill else n
-        assert have <= self.pos, "spec reader: zstd bitstream overread"
-        self.pos -= have
-        lo, hi = self.pos >> 3, (self.pos + have - 1) >> 3
-        chunk = int.from_bytes(self.data[lo : hi + 1], "little")
-        v = (chunk >> (self.pos & 7)) & ((1 << have) - 1)
-        return v << (n - have)
+        if n > self.pos:
+            assert zero_fill, "spec reader: zstd bitstream overread"
+            self.over = True
+        v = self.peek(n)
+        self.pos = max(0, self.pos - n)
+        return v
+
+
+def _zstd_fse_description(src: bytes, max_log: int, max_sym: int):
+    """FSE table description (RFC 8878 §4.1.1): a forward little-endian
+    bitstream of normalized counts → (counts, accuracy log, bytes read).
+    A count of -1 is a "less than 1" probability; a 0 count is followed by
+    2-bit repeat flags for further zeros (3 means "3, and read again")."""
+    val = int.from_bytes(src[:512], "little")
+    log = (val & 0xF) + 5
+    assert log <= max_log, "spec reader: FSE accuracy log too large"
+    pos = 4
+    remaining = (1 << log) + 1
+    threshold = 1 << log
+    nbits = log + 1
+    probs: list[int] = []
+    while remaining > 1:
+        assert len(probs) <= max_sym, "spec reader: FSE symbol overflow"
+        mx = 2 * threshold - 1 - remaining
+        low = (val >> pos) & (threshold - 1)
+        if low < mx:
+            count = low
+            pos += nbits - 1
+        else:
+            count = (val >> pos) & (2 * threshold - 1)
+            if count >= threshold:
+                count -= mx
+            pos += nbits
+        count -= 1
+        remaining -= abs(count)
+        probs.append(count)
+        if count == 0:
+            while True:
+                rep = (val >> pos) & 3
+                pos += 2
+                probs += [0] * rep
+                if rep != 3:
+                    break
+        while remaining < threshold:
+            nbits -= 1
+            threshold >>= 1
+    assert remaining == 1, "spec reader: FSE counts do not sum to the table"
+    return probs, log, (pos + 7) >> 3
 
 
 def _zstd_fse_table(probs, log):
@@ -341,23 +393,52 @@ def _zstd_huf_codes(weights):
 
 
 def _zstd_huf_stream(table, max_bits, src: bytes, out_len: int) -> bytes:
+    lut = [(0, 0)] * (1 << max_bits)
+    for (nb, code), sym in table.items():
+        lo = code << (max_bits - nb)
+        lut[lo : lo + (1 << (max_bits - nb))] = [(sym, nb)] * (1 << (max_bits - nb))
     bits = _ZBackBits(src)
     out = bytearray()
-    while len(out) < out_len:
-        code, nb = 0, 0
-        while (nb, code) not in table:
-            code = (code << 1) | bits.read(1, zero_fill=True)
-            nb += 1
-            assert nb <= max_bits, "spec reader: bad Huffman code"
-        out.append(table[(nb, code)])
+    for _ in range(out_len):
+        sym, nb = lut[bits.peek(max_bits)]
+        assert nb and nb <= bits.pos, "spec reader: bad Huffman code"
+        bits.pos -= nb
+        out.append(sym)
+    assert bits.pos == 0, "spec reader: Huffman bits left over"
     return bytes(out)
 
 
-def _zstd_literals(block: bytes):
-    """Literals section → (literals, bytes consumed). Raw, RLE, and
-    Huffman-compressed with DIRECT weights (1- and 4-stream) — the forms
-    a fresh-per-block encoder emits; treeless/FSE-weights are out of the
-    spec reader's scope and rejected loudly."""
+def _zstd_huf_weights(body: bytes):
+    """Huffman tree description → (weights, bytes read): direct 4-bit
+    weights (header >= 128) or FSE-compressed weights decoded by two
+    interleaved states until the bitstream runs out."""
+    hb = body[0]
+    if hb >= 128:
+        nw = hb - 127
+        weights = [(body[1 + (i >> 1)] >> 4) if i % 2 == 0
+                   else (body[1 + (i >> 1)] & 0xF) for i in range(nw)]
+        return weights, 1 + (nw + 1) // 2
+    desc = body[1 : 1 + hb]
+    probs, log, used = _zstd_fse_description(desc, 6, 255)
+    sym, nb, base = _zstd_fse_table(probs, log)
+    bits = _ZBackBits(desc[used:])
+    states = [bits.read(log), bits.read(log)]
+    weights = []
+    k = 0
+    while True:
+        st = states[k]
+        weights.append(sym[st])
+        states[k] = base[st] + bits.read(nb[st], zero_fill=True)
+        k ^= 1
+        if bits.over:
+            weights.append(sym[states[k]])
+            return weights, 1 + hb
+
+
+def _zstd_literals(block: bytes, state: dict):
+    """Literals section → (literals, bytes consumed). Raw, RLE,
+    Huffman-compressed (1- and 4-stream, direct or FSE-compressed
+    weights) and treeless (the previous Huffman tree of the frame)."""
     import struct as _st
 
     b0 = block[0]
@@ -372,7 +453,6 @@ def _zstd_literals(block: bytes):
         if lb_type == 0:
             return bytes(block[hlen : hlen + regen]), hlen + regen
         return bytes([block[hlen]]) * regen, hlen + 1
-    assert lb_type == 2, "spec reader: treeless zstd literals unsupported"
     if size_fmt == 0:
         four, hlen = False, 3
         regen = (b0 >> 4) + ((block[1] & 0x3F) << 4)
@@ -390,15 +470,14 @@ def _zstd_literals(block: bytes):
         regen = (b0 >> 4) + (block[1] << 4) + ((block[2] & 0x3F) << 12)
         comp = (block[2] >> 6) + (block[3] << 2) + (block[4] << 10)
     body = block[hlen : hlen + comp]
-    hb = body[0]
-    assert hb >= 128, "spec reader: FSE-compressed Huffman weights unsupported"
-    nw = hb - 127
-    weights = []
-    for i in range(nw):
-        b = body[1 + (i >> 1)]
-        weights.append((b >> 4) if i % 2 == 0 else (b & 0xF))
-    table, max_bits = _zstd_huf_codes(weights)
-    payload = body[1 + (nw + 1) // 2 :]
+    if lb_type == 2:
+        weights, used = _zstd_huf_weights(body)
+        state["huf"] = _zstd_huf_codes(weights)
+        payload = body[used:]
+    else:
+        assert state["huf"] is not None, "spec reader: treeless literals first"
+        payload = body
+    table, max_bits = state["huf"]
     if not four:
         lits = _zstd_huf_stream(table, max_bits, payload, regen)
     else:
@@ -413,12 +492,15 @@ def _zstd_literals(block: bytes):
     return lits, hlen + comp
 
 
-def _zstd_block(block: bytes, history: bytearray) -> bytes:
-    """One compressed block: literals + sequences over the PREDEFINED FSE
-    tables (modes byte 0). Described/RLE/repeat sequence tables are out
-    of the spec reader's scope."""
+_Z_MAX = {"ll": (9, 35), "of": (8, 31), "ml": (9, 52)}  # (max log, max symbol)
+
+
+def _zstd_block(block: bytes, history: bytearray, state: dict) -> bytes:
+    """One compressed block: literals + sequences. Each sequence table is
+    predefined, RLE, FSE-described or repeated from the previous block;
+    tables, the Huffman tree and the repeat offsets live for the frame."""
     global _Z_PREDEF
-    lits, pos = _zstd_literals(block)
+    lits, pos = _zstd_literals(block, state)
     b0 = block[pos]
     if b0 == 0:
         return lits
@@ -428,24 +510,41 @@ def _zstd_block(block: bytes, history: bytearray) -> bytes:
         nseq, pos = ((b0 - 128) << 8) + block[pos + 1], pos + 2
     else:
         nseq, pos = block[pos + 1] + (block[pos + 2] << 8) + 0x7F00, pos + 3
-    assert block[pos] == 0, "spec reader: non-predefined zstd sequence tables"
-    pos += 1
     if _Z_PREDEF is None:
         _Z_PREDEF = {
-            "ll": _zstd_fse_table(_Z_LL_DEF, 6),
-            "of": _zstd_fse_table(_Z_OF_DEF, 5),
-            "ml": _zstd_fse_table(_Z_ML_DEF, 6),
+            "ll": (*_zstd_fse_table(_Z_LL_DEF, 6), 6),
+            "of": (*_zstd_fse_table(_Z_OF_DEF, 5), 5),
+            "ml": (*_zstd_fse_table(_Z_ML_DEF, 6), 6),
         }
-    (ll_s, ll_n, ll_b) = _Z_PREDEF["ll"]
-    (of_s, of_n, of_b) = _Z_PREDEF["of"]
-    (ml_s, ml_n, ml_b) = _Z_PREDEF["ml"]
+    modes = block[pos]
+    pos += 1
+    assert modes & 3 == 0, "spec reader: reserved zstd sequence mode bits"
+    tables = {}
+    for key, shift in (("ll", 6), ("of", 4), ("ml", 2)):
+        mode = (modes >> shift) & 3
+        if mode == 0:
+            tables[key] = _Z_PREDEF[key]
+        elif mode == 1:
+            tables[key] = ([block[pos]], [0], [0], 0)
+            pos += 1
+        elif mode == 2:
+            probs, log, used = _zstd_fse_description(block[pos:], *_Z_MAX[key])
+            tables[key] = (*_zstd_fse_table(probs, log), log)
+            pos += used
+        else:
+            assert key in state["tables"], "spec reader: no table to repeat"
+            tables[key] = state["tables"][key]
+    state["tables"] = tables
+    (ll_s, ll_n, ll_b, ll_log) = tables["ll"]
+    (of_s, of_n, of_b, of_log) = tables["of"]
+    (ml_s, ml_n, ml_b, ml_log) = tables["ml"]
     bits = _ZBackBits(block[pos:])
-    st_ll = bits.read(6)
-    st_of = bits.read(5)
-    st_ml = bits.read(6)
+    st_ll = bits.read(ll_log)
+    st_of = bits.read(of_log)
+    st_ml = bits.read(ml_log)
     out = bytearray()
     lit_pos = 0
-    reps = [1, 4, 8]
+    reps = state["reps"]
     hlen = len(history)
     for i in range(nseq):
         of_code = of_s[st_of]
@@ -486,11 +585,10 @@ def _zstd_block(block: bytes, history: bytearray) -> bytes:
 
 
 def _zstd_decode(src: bytes) -> bytes:
-    """Independent decode of zstd frames (RFC 8878): raw + RLE blocks
-    (the engine's store mode) plus compressed blocks in the shape a
-    fresh-per-block encoder emits — raw/RLE/Huffman-direct literals and
-    predefined-FSE sequences. Verifies the xxh64-low-32 checksum is
-    present structurally (value checking stays the engine's job)."""
+    """Independent decode of zstd frames (RFC 8878, no dictionaries): raw,
+    RLE and compressed blocks, with every literals and sequence-table mode.
+    Skips the xxh64-low-32 checksum structurally (value checking stays the
+    engine's job)."""
     import struct as _st
 
     out = bytearray()
@@ -509,6 +607,7 @@ def _zstd_decode(src: bytes) -> bytes:
         fcs_flag = fhd >> 6
         flen = (1 if single else 0, 2, 4, 8)[fcs_flag]
         i += flen  # content size (not needed to walk blocks)
+        state = {"reps": [1, 4, 8], "huf": None, "tables": {}}
         while True:
             bh = src[i] | (src[i + 1] << 8) | (src[i + 2] << 16); i += 3
             last, btype, bsize = bh & 1, (bh >> 1) & 3, bh >> 3
@@ -517,7 +616,7 @@ def _zstd_decode(src: bytes) -> bytes:
             elif btype == 1:
                 out += bytes([src[i]]) * bsize; i += 1
             elif btype == 2:
-                out += _zstd_block(src[i : i + bsize], out); i += bsize
+                out += _zstd_block(src[i : i + bsize], out, state); i += bsize
             else:
                 raise ValueError("spec reader: reserved zstd block type")
             if last:

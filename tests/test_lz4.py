@@ -1,11 +1,12 @@
-"""Pure-Python LZ4 block codec + blosc-lz4 frames (sources/lz4.py,
-blosc1.py's lz4/split support).
+"""LZ4 raw blocks inside blosc-lz4 frames (blosc1.py's lz4 and split-stream
+support; the lz4 codec itself is pyarrow's).
 
-The decoder is the interop-critical direction (reading c-blosc lz4 stores
-with no wheel); it's pinned three ways: hand-built sequences straight from
-the public block format (independent of our encoder), encoder round-trips
-over every payload shape, and hand-built SPLIT blosc frames exercising the
-region-based layout sniffing.
+The decoder is the interop-critical direction (reading c-blosc lz4 stores);
+it's pinned three ways: hand-built sequences straight from the public block
+format, decoded through ``blosc1.decompress`` with the exact size the frame
+declares; round-trips over every payload shape, cross-checked by the
+independent spec reader (tests/spec_zarr_reader.py); and hand-built SPLIT
+blosc frames exercising the region-based layout sniffing.
 """
 
 from __future__ import annotations
@@ -17,58 +18,72 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.lz4 import (
-    LZ4FormatError,
-    compress_block,
-    decompress_block,
-)
+from mdio_cpp_spark.sources.codecs import native_compress, native_decompress
+from tests.spec_zarr_reader import _blosc_decode
+
+
+def _decode(stream: bytes, nbytes: int) -> bytes:
+    """Decode one raw LZ4 block through the engine: a one-block, unshuffled
+    blosc-lz4 frame declaring ``nbytes``."""
+    if len(stream) == nbytes:  # the frame would read it as stored raw
+        return native_decompress("lz4_raw", stream, nbytes)
+    head = struct.pack("<BBBB iii", 2, 1, 1 << 5, 1, nbytes, nbytes,
+                       16 + 4 + 4 + len(stream))
+    return blosc1.decompress(head + struct.pack("<ii", 20, len(stream)) + stream)
+
+
+def _roundtrip(data: bytes) -> bytes:
+    frame = blosc1.compress(data, typesize=1, shuffle=0, cname="lz4")
+    assert _blosc_decode(frame) == data  # independent decoder agrees
+    return blosc1.decompress(frame)
+
 
 # ------------------------------------------------------ block format itself
 
 
 def test_decode_handcrafted_sequences():
     # [token 0x50: 5 literals, no match end] "hello"
-    assert decompress_block(b"\x50hello") == b"hello"
+    assert _decode(b"\x50hello", 5) == b"hello"
     # 4 literals "abcd", then match len 8 offset 4 (overlap → abcdabcdabcd),
-    # then terminating 1 literal "!"
-    blk = bytes([0x44]) + b"abcd" + b"\x04\x00" + bytes([0x10]) + b"!"
-    assert decompress_block(blk) == b"abcdabcdabcd!"
+    # then the 5 terminating literals the block format requires at the end
+    blk = bytes([0x44]) + b"abcd" + b"\x04\x00" + bytes([0x50]) + b"!end!"
+    assert _decode(blk, 17) == b"abcdabcdabcd!end!"
     # long literal run: token 0xF0, ext 255+3 → 15+255+3 = 273 literals
     lits = bytes(range(256)) + bytes(17)
     blk = bytes([0xF0, 255, 3]) + lits
-    assert decompress_block(blk) == lits
+    assert _decode(blk, 273) == lits
     # long match: 4 lits, match 15+4+255+0... ext: token low=15 → 19+ext
-    blk = bytes([0x4F]) + b"wxyz" + b"\x04\x00" + bytes([255, 0]) + bytes([0x10]) + b"."
-    out = decompress_block(blk)
-    assert out == b"wxyz" + (b"wxyz" * 70)[: 15 + 4 + 255] + b"."
+    blk = bytes([0x4F]) + b"wxyz" + b"\x04\x00" + bytes([255, 0]) + bytes([0x50]) + b".end."
+    out = _decode(blk, 4 + 15 + 4 + 255 + 5)
+    assert out == b"wxyz" + (b"wxyz" * 70)[: 15 + 4 + 255] + b".end."
 
 
 def test_decode_rejects_malformed():
-    with pytest.raises(LZ4FormatError):
-        decompress_block(b"\x50hi")  # literal run past end
-    with pytest.raises(LZ4FormatError):
-        decompress_block(bytes([0x14]) + b"a" + b"\x04")  # truncated offset
-    with pytest.raises(LZ4FormatError):
-        decompress_block(bytes([0x10]) + b"a" + b"\x05\x00")  # offset > produced
-    with pytest.raises(LZ4FormatError):
-        decompress_block(bytes([0x10]) + b"a" + b"\x00\x00")  # zero offset
-    with pytest.raises(LZ4FormatError):
-        decompress_block(b"\x50hello", expected_size=9)  # wrong size
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(b"\x50hi", 5)  # literal run past end
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(bytes([0x14]) + b"a" + b"\x04", 9)  # truncated offset
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(bytes([0x10]) + b"a" + b"\x05\x00", 5)  # offset > produced
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(bytes([0x10]) + b"a" + b"\x00\x00", 5)  # zero offset
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(b"\x50hello", 9)  # wrong size
 
 
 def test_decode_bomb_bounded_by_expected_size():
     """A hostile block whose RLE overlap match declares ~100 MB of output
-    must abort AT the declared-size boundary, not after materializing the
-    expansion — the early in-loop check bounds memory to expected_size."""
+    must be refused at the declared size: the decoder writes into a buffer
+    of exactly the size the frame declares and never grows it."""
     # token 0x1F: 1 literal, match len 15+4+ext; offset 1 → RLE of 'a'
     ext = bytes([255]) * 400_000 + bytes([0])     # mlen ≈ 102e6
     blk = bytes([0x1F]) + b"a" + b"\x01\x00" + ext + bytes([0x10]) + b"."
-    with pytest.raises(LZ4FormatError, match="exceeds declared size"):
-        decompress_block(blk, expected_size=16)
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(blk, 16)
     # literal-run form of the same bomb: 100 KB of literals vs declared 8
     lit = bytes([0xF0]) + bytes([255]) * 392 + bytes([4]) + bytes(100_000)
-    with pytest.raises(LZ4FormatError, match="exceeds declared size"):
-        decompress_block(lit, expected_size=8)
+    with pytest.raises(blosc1.BloscFormatError, match="lz4 stream"):
+        _decode(lit, 8)
 
 
 @pytest.mark.parametrize("payload", [
@@ -81,12 +96,12 @@ def test_decode_bomb_bounded_by_expected_size():
     np.random.default_rng(7).bytes(5000),            # incompressible
 ])
 def test_block_roundtrip(payload):
-    assert decompress_block(compress_block(payload), len(payload)) == payload
+    assert _roundtrip(payload) == payload
 
 
 def test_compressor_actually_compresses():
-    assert len(compress_block(bytes(100_000))) < 1000
-    assert len(compress_block(b"ab" * 50_000)) < 1000
+    for data in (bytes(100_000), b"ab" * 50_000):
+        assert len(blosc1.compress(data, typesize=1, cname="lz4")) < 1000
 
 
 # ------------------------------------------------------ blosc-lz4 frames
@@ -129,7 +144,7 @@ def test_decode_handcrafted_split_frame():
     streams = b""
     for s in range(typesize):
         sub = shuffled[s * ne : (s + 1) * ne]
-        comp = compress_block(sub)
+        comp = native_compress("lz4_raw", sub)
         if len(comp) >= ne:  # raw fallback marker
             streams += struct.pack("<i", ne) + sub
         else:
@@ -153,7 +168,7 @@ def test_codecs_v2_blosc_lz4_without_wheel():
              {"name": "blosc", "configuration": {"cname": "lz4", "typesize": 8,
                                                  "shuffle": "shuffle"}}]
     enc3 = codecs.compress_v3(data, chain)
-    assert codecs.decompress_v3(enc3, chain) == data
+    assert codecs.decompress_v3(enc3, chain, nbytes=len(data)) == data
 
 
 @pytest.mark.parametrize("version", [2, 3])
@@ -227,7 +242,7 @@ try:
     @settings(max_examples=60, deadline=None)
     @given(data=st.binary(min_size=0, max_size=4096))
     def test_lz4_block_roundtrip_property(data):
-        assert decompress_block(compress_block(data), len(data)) == data
+        assert _roundtrip(data) == data
 
     @settings(max_examples=40, deadline=None)
     @given(

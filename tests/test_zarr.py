@@ -501,9 +501,7 @@ def test_multi_run_sel_read_and_counts():
 
 
 def test_blosc_codec_branch():
-    # conditional: runs the real blosc roundtrip wherever the wheel exists,
-    # and pins the v2/v3 config mapping (incl. the v3 shuffle names) here
-    blosc = pytest.importorskip("blosc")  # noqa: F841
+    # pins the v2/v3 config mapping (incl. the v3 shuffle names) here
     from mdio_cpp_spark.sources import codecs
 
     payload = bytes(range(256)) * 64
@@ -512,18 +510,18 @@ def test_blosc_codec_branch():
     chain = [{"name": "bytes", "configuration": {"endian": "little"}},
              {"name": "blosc", "configuration": {"cname": "zstd", "clevel": 3,
                                                  "shuffle": "bitshuffle", "typesize": 4}}]
-    assert codecs.decompress_v3(codecs.compress_v3(payload, chain), chain) == payload
+    assert codecs.decompress_v3(codecs.compress_v3(payload, chain), chain,
+                                nbytes=len(payload)) == payload
 
 
 def test_zstd_codec_gated():
     from mdio_cpp_spark.sources import codecs
 
-    if codecs._zstd_compress is None:
-        with pytest.raises(codecs.CodecError, match="zstd"):
-            codecs.compress_v3(b"x" * 64, [{"name": "zstd", "configuration": {}}])
-    else:  # pragma: no cover - env-dependent
-        out = codecs.compress_v3(b"x" * 64, [{"name": "zstd", "configuration": {}}])
-        assert codecs.decompress_v3(out, [{"name": "zstd", "configuration": {}}]) == b"x" * 64
+    chain = [{"name": "zstd", "configuration": {}}]
+    out = codecs.compress_v3(b"x" * 64, chain)
+    assert codecs.decompress_v3(out, chain, nbytes=64) == b"x" * 64
+    with pytest.raises(codecs.CodecError, match="zstd"):
+        codecs.decompress_v3(out, chain, nbytes=65)
     # v3 blosc shuffle names map to the wheel's int constants
     assert codecs._blosc_shuffle("noshuffle") == 0
     assert codecs._blosc_shuffle("bitshuffle") == 2
@@ -1238,9 +1236,8 @@ def test_bands_from_signatures_matches_minhash_bands(spark, sf_dir):
 
 def test_spec_compressor_all_cnames_honored_natively():
     """Every blosc cname the reference accepts maps to a real blosc codec —
-    no zlib fallback remains (blosclz per ADVICE r6; snappy and zstd now
-    have wheel-free paths too: snappy.py greedy encoder, zstd.py
-    store-mode frames + full RFC 8878 decode)."""
+    no zlib fallback remains (blosclz.py for blosclz; pyarrow's codecs
+    for lz4, snappy and zstd)."""
     from mdio_cpp_spark.model import _map_spec_compressor
 
     for cname in ("blosclz", "snappy", "zstd", "lz4", "zlib"):

@@ -1,10 +1,9 @@
-"""Pure-Python zstd (RFC 8878): handcrafted vectors pin the frame/block/
-literals/sequences wire format; differential round-trips run against the
-INDEPENDENT spec-derived encoder (tests/zstd_ref_encoder.py — constructs
-FSE/Huffman bitstreams by walking the decode state machine backwards, no
-engine imports). With no zstd wheel installable (tests/INTEROP_PROBE.md)
-these vectors ARE the format contract, the same posture as
-blosclz/lz4/snappy."""
+"""zstd (RFC 8878) through the engine's v3 ``zstd`` stage (pyarrow's codec):
+handcrafted vectors pin the frame/block/literals/sequences wire format;
+differential round-trips run against the INDEPENDENT spec-derived encoder
+(tests/zstd_ref_encoder.py — constructs FSE/Huffman bitstreams by walking
+the decode state machine backwards, no engine imports). Every decode
+declares the exact regenerated size, as the store does for a chunk."""
 
 from __future__ import annotations
 
@@ -15,13 +14,20 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.zstd import (
-    ZstdFormatError,
-    compress,
-    decompress,
-    xxh64,
-)
+from mdio_cpp_spark.sources.codecs import CodecError, compress_v3, decompress_v3
 from tests import zstd_ref_encoder as enc
+
+_CHAIN = [{"name": "bytes", "configuration": {"endian": "little"}},
+          {"name": "zstd", "configuration": {"level": 3}}]
+
+
+def compress(data: bytes) -> bytes:
+    return compress_v3(data, _CHAIN)
+
+
+def decompress(frames: bytes, size: int) -> bytes:
+    """Decode zstd frames as one chunk that must regenerate ``size`` bytes."""
+    return decompress_v3(frames, _CHAIN, nbytes=size)
 
 
 def _run_frame(blocks_lits_seqs):
@@ -39,17 +45,6 @@ def _run_frame(blocks_lits_seqs):
     return bytes(out)
 
 
-# ------------------------------------------------------------ xxhash64
-
-def test_xxh64_public_vectors():
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert xxh64(b"abc") == 0x44BC2CF5AD770999
-    # >32-byte path (stripe accumulator)
-    assert xxh64(b"x" * 100) == xxh64(b"x" * 100)
-    assert xxh64(b"x" * 100) != xxh64(b"x" * 99)
-
-
 # ----------------------------------------------- frame / block plumbing
 
 def test_store_mode_roundtrip_all_fcs_sizes():
@@ -65,14 +60,14 @@ def test_rle_and_raw_blocks_handcrafted():
     body = ((0 | (len(raw) << 3)).to_bytes(3, "little") + raw
             + (1 | 2 | (rle_n << 3)).to_bytes(3, "little") + b"z")
     frame = struct.pack("<I", 0xFD2FB528) + bytes([0x20, len(raw) + rle_n]) + body
-    assert decompress(frame) == raw + b"z" * rle_n
+    assert decompress(frame, len(raw) + rle_n) == raw + b"z" * rle_n
 
 
 def test_skippable_and_concatenated_frames():
     f1 = compress(b"first|")
     skip = struct.pack("<II", 0x184D2A53, 5) + b"JUNK!"
     f2 = compress(b"second")
-    assert decompress(f1 + skip + f2) == b"first|second"
+    assert decompress(f1 + skip + f2, 12) == b"first|second"
 
 
 def test_window_descriptor_and_fcs_flag1():
@@ -83,38 +78,43 @@ def test_window_descriptor_and_fcs_flag1():
     body = (1 | (len(content) << 3)).to_bytes(3, "little") + content
     frame = (struct.pack("<I", 0xFD2FB528) + bytes([fhd, wd])
              + (300 - 256).to_bytes(2, "little") + body)
-    assert decompress(frame) == content
+    assert decompress(frame, 300) == content
 
 
 def test_checksum_verified():
-    frame = bytearray(compress(b"checksummed payload"))
+    # one raw block with the content checksum flag: the low 32 bits of
+    # XXH64(content, seed 0), little-endian
+    content = b"checksummed payload"
+    frame = bytearray(enc.frame([(0, content, None)], len(content),
+                                checksum=b"\x1dL(L"))
+    assert decompress(bytes(frame), len(content)) == content
     frame[-1] ^= 0xFF
-    with pytest.raises(ZstdFormatError, match="checksum mismatch"):
-        decompress(bytes(frame))
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(bytes(frame), len(content))
 
 
 def test_error_paths():
-    with pytest.raises(ZstdFormatError, match="bad zstd magic"):
-        decompress(b"\x00\x01\x02\x03rest")
+    with pytest.raises(CodecError, match="zstd chunk"):  # bad magic
+        decompress(b"\x00\x01\x02\x03rest", 4)
     # reserved block type
     frame = struct.pack("<I", 0xFD2FB528) + bytes([0x20, 4]) + (
         1 | 6 | (4 << 3)).to_bytes(3, "little") + b"abcd"
-    with pytest.raises(ZstdFormatError, match="reserved block type"):
-        decompress(frame)
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(frame, 4)
     # dictionary refusal
     fr = struct.pack("<I", 0xFD2FB528) + bytes([0x21, 7, 0]) + b"\x01"
-    with pytest.raises(ZstdFormatError, match="dictionaries unsupported"):
-        decompress(fr)
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(fr, 1)
     # declared-size bomb bound: frame says 4, raw block carries 8
     fr = struct.pack("<I", 0xFD2FB528) + bytes([0x20, 4]) + (
         1 | (8 << 3)).to_bytes(3, "little") + b"12345678"
-    with pytest.raises(ZstdFormatError, match="exceeds its declared bound"):
-        decompress(fr)
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(fr, 4)
     # expected_size mismatch from the container
-    with pytest.raises(ZstdFormatError, match="expected 9"):
+    with pytest.raises(CodecError, match="zstd chunk"):
         decompress(compress(b"abc"), 9)
-    with pytest.raises(ZstdFormatError, match="runs past the input"):
-        decompress(compress(b"abcdef")[:-6])
+    with pytest.raises(CodecError, match="zstd chunk"):  # truncated frame
+        decompress(compress(b"abcdef")[:-6], 6)
 
 
 # -------------------------------------- handcrafted compressed blocks
@@ -127,13 +127,13 @@ def test_rle_mode_sequence_block_handcrafted():
                                                  0x03, 0x04])
     bh = (1 | (2 << 1) | (len(block) << 3)).to_bytes(3, "little")
     frame = struct.pack("<I", 0xFD2FB528) + bytes([0x20, 14]) + bh + block
-    assert decompress(frame) == b"abcd" + b"d" * 6 + b"efgh"
+    assert decompress(frame, 14) == b"abcd" + b"d" * 6 + b"efgh"
 
 
 def test_rle_literals_section():
     sec = enc.literals_rle(ord("q"), 40)
     block = sec + bytes([0])
-    assert decompress(enc.frame([(2, block, None)], 40)) == b"q" * 40
+    assert decompress(enc.frame([(2, block, None)], 40), 40) == b"q" * 40
 
 
 # ------------------------------------- differential: FSE sequences
@@ -144,7 +144,7 @@ def test_predefined_fse_sequences():
     block = enc.literals_raw(lits) + enc.encode_sequences(
         seqs, ("predef",), ("predef",), ("predef",))
     want = _run_frame([(lits, [(4, 4, 5), (3, 2, 4), (0, 9, 3)])])
-    assert decompress(enc.frame([(2, block, None)], len(want))) == want
+    assert decompress(enc.frame([(2, block, None)], len(want)), len(want)) == want
 
 
 _LL_PROBS = [8, 8, 4, 4, 2, 2, 2, 2]
@@ -160,7 +160,7 @@ def test_fse_described_tables():
         seqs, ("fse", _LL_PROBS, 5), ("fse", _OF_PROBS, 5),
         ("fse", _ML_PROBS, 6))
     want = _run_frame([(lits, [(ll, ov - 3, ml) for ll, ov, ml in seqs])])
-    assert decompress(enc.frame([(2, block, None)], len(want))) == want
+    assert decompress(enc.frame([(2, block, None)], len(want)), len(want)) == want
 
 
 def test_repeated_offsets_incl_ll0_shift_and_rep1_minus_1():
@@ -189,7 +189,7 @@ def test_repeated_offsets_incl_ll0_shift_and_rep1_minus_1():
                 reps = [off] + reps[:2]
         resolved.append((ll, off, ml))
     want = _run_frame([(lits, resolved)])
-    assert decompress(enc.frame([(2, block, None)], len(want))) == want
+    assert decompress(enc.frame([(2, block, None)], len(want)), len(want)) == want
 
 
 def test_repeat_table_mode_and_cross_block_matches():
@@ -208,7 +208,7 @@ def test_repeat_table_mode_and_cross_block_matches():
         (litsA, [(ll, ov - 3, ml) for ll, ov, ml in seqsA]),
         (litsB, [(ll, ov - 3, ml) for ll, ov, ml in seqsB]),
     ])
-    got = decompress(enc.frame([(2, bA, None), (2, bB, None)], len(want)))
+    got = decompress(enc.frame([(2, bA, None), (2, bB, None)], len(want)), len(want))
     assert got == want
 
 
@@ -216,16 +216,16 @@ def test_repeat_mode_without_previous_table_rejected():
     block = enc.literals_raw(b"xy") + enc.encode_sequences(
         [(1, 1 + 3, 3)], ("repeat", _LL_PROBS, 5), ("repeat", _OF_PROBS, 5),
         ("repeat", _ML_PROBS, 6))
-    with pytest.raises(ZstdFormatError, match="no previous"):
-        decompress(enc.frame([(2, block, None)], 6))
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(enc.frame([(2, block, None)], 6), 6)
 
 
 def test_offset_beyond_window_rejected():
     seqs = [(2, 50 + 3, 4)]  # offset 50 with only 2 produced bytes
     block = enc.literals_raw(b"ab") + enc.encode_sequences(
         seqs, ("predef",), ("predef",), ("predef",))
-    with pytest.raises(ZstdFormatError, match="match offset"):
-        decompress(enc.frame([(2, block, None)], 6))
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(enc.frame([(2, block, None)], 6), 6)
 
 
 # ------------------------------------- differential: Huffman literals
@@ -237,7 +237,7 @@ def test_huffman_direct_weights_single_stream():
     data = bytes([0, 1, 0, 2, 0, 1, 3, 0, 0, 1, 2, 0, 3, 1, 0, 0] * 3)
     sec = enc.literals_compressed(data, _HUF, four=False,
                                   tree=_HUF.tree_direct())
-    got = decompress(enc.frame([(2, sec + bytes([0]), None)], len(data)))
+    got = decompress(enc.frame([(2, sec + bytes([0]), None)], len(data)), len(data))
     assert got == data
 
 
@@ -245,7 +245,7 @@ def test_huffman_four_streams():
     data = bytes([0, 1, 2, 3][i % 4] for i in range(201))  # uneven 4th part
     sec = enc.literals_compressed(data, _HUF, four=True,
                                   tree=_HUF.tree_direct())
-    got = decompress(enc.frame([(2, sec + bytes([0]), None)], len(data)))
+    got = decompress(enc.frame([(2, sec + bytes([0]), None)], len(data)), len(data))
     assert got == data
 
 
@@ -254,11 +254,12 @@ def test_treeless_literals_reuse_previous_tree():
     b1 = enc.literals_compressed(data, _HUF, four=False,
                                  tree=_HUF.tree_direct()) + bytes([0])
     b2 = enc.literals_compressed(data, _HUF, four=False, tree=None) + bytes([0])
-    got = decompress(enc.frame([(2, b1, None), (2, b2, None)], 2 * len(data)))
+    got = decompress(enc.frame([(2, b1, None), (2, b2, None)], 2 * len(data)),
+                     2 * len(data))
     assert got == data + data
     # treeless FIRST block must be refused
-    with pytest.raises(ZstdFormatError, match="no previous tree"):
-        decompress(enc.frame([(2, b2, None)], len(data)))
+    with pytest.raises(CodecError, match="zstd chunk"):
+        decompress(enc.frame([(2, b2, None)], len(data)), len(data))
 
 
 def test_huffman_fse_compressed_weights():
@@ -268,7 +269,7 @@ def test_huffman_fse_compressed_weights():
     data = bytes([i % 8 for i in range(120)])
     sec = enc.literals_compressed(data, huf, four=False,
                                   tree=huf.tree_fse(probs, 5))
-    got = decompress(enc.frame([(2, sec + bytes([0]), None)], len(data)))
+    got = decompress(enc.frame([(2, sec + bytes([0]), None)], len(data)), len(data))
     assert got == data
 
 
@@ -281,7 +282,7 @@ def test_huffman_literals_with_sequences():
     block = sec + enc.encode_sequences(seqs, ("predef",), ("predef",),
                                        ("predef",))
     want = _run_frame([(lits, [(ll, ov - 3, ml) for ll, ov, ml in seqs])])
-    assert decompress(enc.frame([(2, block, None)], len(want))) == want
+    assert decompress(enc.frame([(2, block, None)], len(want)), len(want)) == want
 
 
 # --------------------------------------------------- codec integration
@@ -291,19 +292,14 @@ def test_blosc_zstd_roundtrip_and_codec_chain():
     for shuffle in (0, 1, 2):
         fr = blosc1.compress(data, typesize=8, shuffle=shuffle, cname="zstd")
         assert blosc1.decompress(fr) == data
-    from mdio_cpp_spark.sources.codecs import compress_v3, decompress_v3
-
-    chain = [{"name": "bytes", "configuration": {"endian": "little"}},
-             {"name": "zstd", "configuration": {"level": 3}}]
     payload = b"chunk payload " * 700
-    encd = compress_v3(payload, chain)
-    assert decompress_v3(encd, chain) == payload
+    assert decompress(compress(payload), len(payload)) == payload
 
 
 def test_v3_zstd_store_roundtrip_spark_and_spec_reader(spark, tmp_path):
-    """A v3 store with a {'name': 'zstd'} chain: distributed write
-    (compressed-block frames since round 8), distributed scan, plus the
-    independent spec reader's zstd branch over the same bytes."""
+    """A v3 store with a {'name': 'zstd'} chain: distributed write,
+    distributed scan, plus the independent spec reader's zstd branch over
+    the same bytes."""
     from pyspark.sql import functions as F
 
     from mdio_cpp_spark.sources.reader import scan_array
@@ -363,10 +359,11 @@ def test_entropy_coded_zstd_store_reads_through_spark(spark, tmp_path):
 
 
 def test_corruption_fuzz_never_hangs_or_overallocates():
-    """Random single-byte corruptions of valid frames (both store-mode and
-    entropy-coded) must either still decode to SOMETHING size-bounded or
-    raise ZstdFormatError — never hang, never materialize more than the
-    bomb bound, never escape with a foreign exception."""
+    """Random single-byte corruptions of valid frames (pyarrow-encoded and
+    entropy-coded by the reference encoder) must either still decode to
+    exactly the declared size or raise CodecError — never hang, never
+    materialize more than the bomb bound, never escape with a foreign
+    exception."""
     rng = random.Random(99)
     lits = b"abcdefghij_XYZ_0123"
     seqs = [(4, 4 + 3, 5), (3, 2 + 3, 4), (0, 9 + 3, 3)]
@@ -374,18 +371,18 @@ def test_corruption_fuzz_never_hangs_or_overallocates():
         seqs, ("predef",), ("predef",), ("predef",))
     want_len = len(_run_frame([(lits, [(4, 4, 5), (3, 2, 4), (0, 9, 3)])]))
     frames = [
-        compress(bytes(rng.randrange(256) for _ in range(3000))),
-        enc.frame([(2, block, None)], want_len),
+        (compress(bytes(rng.randrange(256) for _ in range(3000))), 3000),
+        (enc.frame([(2, block, None)], want_len), want_len),
     ]
-    for base in frames:
+    for base, size in frames:
         for _ in range(400):
             mut = bytearray(base)
             i = rng.randrange(len(mut))
             mut[i] ^= 1 << rng.randrange(8)
             try:
-                out = decompress(bytes(mut))
-                assert len(out) <= len(base) * 64  # no amplification blowup
-            except ZstdFormatError:
+                out = decompress(bytes(mut), size)
+                assert len(out) == size  # no amplification blowup
+            except CodecError:
                 pass  # the expected loud failure
 
 
@@ -420,5 +417,5 @@ def test_randomized_sequence_programs_roundtrip():
         want = _run_frame([(lits, resolved)])
         block = enc.literals_raw(lits) + enc.encode_sequences(
             seqs, ("predef",), ("predef",), ("predef",))
-        got = decompress(enc.frame([(2, block, None)], len(want)))
+        got = decompress(enc.frame([(2, block, None)], len(want)), len(want))
         assert got == want, f"trial {trial}"

@@ -1,15 +1,14 @@
-"""Compressed-block zstd ENCODE gates (round-8 task).
+"""zstd ENCODE gates for the v3 ``zstd`` stage and blosc ``cname=zstd``.
 
-The engine encoder (sources/zstd.py: Huffman literals + predefined-FSE
-sequences, raw-block fallback) is pinned two independent ways:
+The engine's zstd frames (pyarrow's codec) are pinned two ways:
 
-  1. engine encode -> engine decode (full RFC 8878 decoder, checksums on);
+  1. engine encode -> engine decode at the exact chunk size;
   2. engine encode -> tests/spec_zarr_reader.py decode (ZERO engine
      imports — the stand-in third-party reader).
 
-plus size gates: a compressible chunk must actually shrink (the round-7
-store mode never did), and the v3 ``zstd`` chain + blosc ``cname=zstd``
-write paths must produce smaller-than-raw objects end to end.
+plus size gates: a compressible chunk must actually shrink, and the v3
+``zstd`` chain + blosc ``cname=zstd`` write paths must produce
+smaller-than-raw objects end to end.
 """
 
 from __future__ import annotations
@@ -20,23 +19,27 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.zstd import (
-    ZstdFormatError,
-    _encode_block,
-    _huf_limited_lengths,
-    _lz_parse,
-    compress,
-    decompress,
-)
+from mdio_cpp_spark.sources.codecs import compress_v3, decompress_v3
 from tests.spec_zarr_reader import _zstd_decode
+
+_CHAIN = [{"name": "bytes", "configuration": {"endian": "little"}},
+          {"name": "zstd", "configuration": {"level": 3}}]
+
+
+def compress(data: bytes) -> bytes:
+    return compress_v3(data, _CHAIN)
+
+
+def decompress(frames: bytes, size: int) -> bytes:
+    return decompress_v3(frames, _CHAIN, nbytes=size)
 
 
 # ------------------------------------------------------------ size gates
 
 
 def test_compressible_chunk_shrinks():
-    """THE round-8 acceptance: encoded-size < raw for a compressible
-    chunk (text, numeric-smooth, RLE), through the DEFAULT level."""
+    """Encoded size < raw for a compressible chunk (text, numeric-smooth,
+    RLE), through the DEFAULT level."""
     cases = {
         "text": b"the quick brown fox jumps over the lazy dog. " * 800,
         "numeric": (np.arange(30_000) % 991).astype("<f8").tobytes(),
@@ -54,16 +57,8 @@ def test_compressible_chunk_shrinks():
 def test_incompressible_falls_back_to_raw_blocks():
     data = np.random.RandomState(3).bytes(60_000)
     enc = compress(data)
-    # frame overhead only: magic+header+fcs + one 3-byte block header + checksum
+    # frame overhead only: magic + header + fcs + one 3-byte block header
     assert len(enc) <= len(data) + 16
-    assert decompress(enc, len(data)) == data
-    assert _zstd_decode(enc) == data
-
-
-def test_store_mode_still_available():
-    data = b"compressible! " * 1000
-    enc = compress(data, level=0)
-    assert len(enc) > len(data)  # raw blocks: no shrink by construction
     assert decompress(enc, len(data)) == data
     assert _zstd_decode(enc) == data
 
@@ -101,63 +96,14 @@ def test_roundtrip_engine_and_spec_reader(kind):
 
 
 def test_matches_cross_128k_lz_window_safely():
-    """Blocks are parsed independently; a pattern straddling the 128 KiB
-    block boundary must still regenerate exactly."""
+    """A pattern straddling the 128 KiB block boundary must still
+    regenerate exactly."""
     pat = bytes(range(251))
     data = (pat * (140_000 // len(pat) + 1))[:140_000]
     enc = compress(data)
     assert len(enc) < 4096
     assert decompress(enc, len(data)) == data
     assert _zstd_decode(enc) == data
-
-
-def test_corrupted_compressed_block_raises():
-    enc = bytearray(compress(b"hello hello hello hello " * 500))
-    enc[len(enc) // 2] ^= 0xFF
-    with pytest.raises(ZstdFormatError):
-        decompress(bytes(enc), 12_000)
-
-
-# --------------------------------------------------- component invariants
-
-
-def test_package_merge_lengths_limited_and_kraft_exact():
-    # Fibonacci-ish frequencies force >11-bit codes when unlimited
-    freqs = {}
-    a, b = 1, 1
-    for s in range(30):
-        freqs[s] = a
-        a, b = b, a + b
-    lens = _huf_limited_lengths(freqs, 11)
-    assert max(lens.values()) <= 11
-    assert sum(2 ** (11 - ln) for ln in lens.values()) == 2**11  # complete
-    # two-symbol degenerate case
-    lens2 = _huf_limited_lengths({65: 1000, 66: 1}, 11)
-    assert lens2 == {65: 1, 66: 1}
-
-
-def test_lz_parse_reconstructs():
-    npr = np.random.RandomState(9)
-    for _ in range(50):
-        pieces = [npr.bytes(npr.randint(0, 40)) for _ in range(8)]
-        block = (b"".join(pieces) * 30)[: npr.randint(10, 6000)]
-        seqs, lits = _lz_parse(block)
-        out = bytearray()
-        lp = 0
-        for ll, ov, ml in seqs:
-            assert ov > 3  # no repeat-offset shorthand
-            out += lits[lp : lp + ll]
-            lp += ll
-            off = ov - 3
-            assert 0 < off <= len(out)
-            for _k in range(ml):
-                out.append(out[len(out) - off])
-        out += lits[lp:]
-        assert bytes(out) == block
-
-
-def test_encode_block_declines_random_noise():
-    assert _encode_block(np.random.RandomState(5).bytes(8000)) is None
 
 
 # -------------------------------------------------- write-path integration
@@ -199,8 +145,7 @@ def test_blosc_zstd_streams_actually_compress_and_spec_read():
 def test_roundtrip_hypothesis_property():
     """Property fuzz: decompress(compress(x), len(x)) == x for arbitrary
     byte strings, through BOTH decoders (engine + independent spec
-    reader). Shrinking gives a minimal counterexample if the encoder
-    ever regresses."""
+    reader)."""
     hypothesis = pytest.importorskip("hypothesis")
     from hypothesis import given, settings, strategies as st
 
